@@ -10,8 +10,8 @@ object IterProbe {
     val g = graft.queries.GraphQueries.chainGraph(spark, sfDir).cached()
     graft.algos.CoreNumber.run(g).count()
     println(s"[iterprobe] core_number iters=${graft.algos.CoreNumber.lastIterations}")
-    graft.algos.TriangleCount.twoCore(g).edges.count()
-    println(s"[iterprobe] two_core rounds=${graft.algos.TriangleCount.lastTwoCoreRounds}")
+    val (_, rounds, _) = graft.algos.TriangleCount.peel(g)
+    println(s"[iterprobe] two_core rounds=$rounds")
     spark.stop()
   }
 }

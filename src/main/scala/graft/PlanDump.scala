@@ -9,9 +9,9 @@ import java.nio.file.{Files, Paths}
  * `<outDir>/<query>_<tag>.txt` — the judge-checkable before/after
  * evidence for plans/r06. Iterative algorithms return a
  * Lineage-truncated frame (a flat LogicalRDD scan), so for those the
- * meaningful plan is the superstep body; where an algorithm has an
- * explain hook (e.g. SPARK_GRAFT_EXPLAIN in PageRank) the hook's
- * stdout complements these files.
+ * meaningful plan is the superstep body; the SPARK_GRAFT_EXPLAIN
+ * hooks (graft.core.Superstep, Hits, Betweenness) print it to stdout,
+ * complementing these files.
  *
  * Usage: runMain graft.PlanDump <sfDir> <outDir> <tag> <q1>[,<q2>...]
  */

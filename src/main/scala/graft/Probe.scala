@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
 import graft.algos.PageRank
 import graft.core.LinkGraph
 
-/** Ad-hoc performance probe: per-iteration PageRank timings on a cached
- * RMAT edge table. Usage: runMain graft.Probe <cpus> <scale> [partsMult]. */
+/** Ad-hoc performance probe: PageRank wall time and GTEPS on a cached
+ * RMAT edge table (per-iteration cost: `perfbench --trace 1`). Usage: runMain graft.Probe <cpus> <scale> [partsMult]. */
 object Probe {
   def main(args: Array[String]): Unit = {
     val cpus = args(0).toInt
@@ -41,7 +41,7 @@ object Probe {
       numPartitions = parts).cached()
     val e = g.numEdges
     val t0 = System.nanoTime()
-    val r = PageRank.run(g, PageRank.Config(verbose = true))
+    val r = PageRank.run(g)
     println(f"[probe] run-returned ${(System.nanoTime() - t0) / 1e9}%.2f")
     r.ranks.count()
     val sec = (System.nanoTime() - t0) / 1e9

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.checkpoint.CheckpointManager
-import graft.core.{Lineage, LinkGraph}
+import graft.core.{Lineage, LinkGraph, Superstep}
 import graft.core.LinkGraph.{DST, ID, SRC}
 
 /**
@@ -142,20 +142,19 @@ object Bfs {
 
     // Resume from the latest committed level: the frontier is exactly
     // the rows at the checkpoint's max distance.
-    // Fingerprint = edge set + sorted sources: a checkpoint root
-    // reused for a different graph or source set is ignored, not
-    // silently resumed into wrong distances.
-    val fp = cfg.checkpoint.map(_.graphFingerprint(
-      edges, "bfs" +: sources.sorted.map(_.toString): _*)).getOrElse("")
+    // Fingerprint = edge set + sorted sources + state format (the
+    // superstep driver's rule): a checkpoint root reused for a different
+    // graph or source set is ignored, not silently resumed into wrong
+    // distances.
+    val init = sources.map(s => (s, 0L, s)).toDF(ID, "distance", "predecessor")
+      .repartition(p, col(ID))
+    val fp = cfg.checkpoint.map(Superstep.fingerprint(
+      _, edges, init, "bfs" +: sources.sorted.map(_.toString))).getOrElse("")
     val resume = cfg.checkpoint.flatMap(cm =>
       cm.latestIteration(cfg.algoName, fp).map(it =>
         (it.toLong, cm.restore(cfg.algoName, it).repartition(p, col(ID)))))
 
-    var visited = Lineage.materialize(
-      resume.map(_._2).getOrElse(
-        sources.map(s => (s, 0L, s)).toDF(ID, "distance", "predecessor")
-          .repartition(p, col(ID))),
-      eager = false)
+    var visited = Lineage.materialize(resume.map(_._2).getOrElse(init), eager = false)
     var depth = resume.map(_._1).getOrElse(0L)
     var frontier =
       if (resume.isEmpty) visited

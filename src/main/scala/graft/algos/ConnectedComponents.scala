@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.checkpoint.CheckpointManager
-import graft.core.{Lineage, LinkGraph}
+import graft.core.{LinkGraph, Superstep}
 import graft.core.LinkGraph.{DST, ID, SRC}
 
 /**
@@ -62,52 +62,30 @@ object ConnectedComponents {
       .select(col(ID), col(ID).as(COMP), lit(true).as(CHANGED))
       .repartition(p, col(ID))
 
-    val fp = cfg.checkpoint.map(_.graphFingerprint(g.edges, "wcc"))
-      .getOrElse("")
-    val resume = cfg.checkpoint
-      .flatMap(cm => cm.latestIteration(cfg.algoName, fp).map(it =>
-        (it, cm.restore(cfg.algoName, it).repartition(p, col(ID)))))
-
-    var state = Lineage.materialize(resume.map(_._2).getOrElse(init), eager = false)
-    var iter = resume.map(_._1).getOrElse(0)
-    var active = 1L
-    var converged = false
-
-    while (!converged && iter < cfg.maxIter) {
-      iter += 1
+    val ckpt = cfg.checkpoint.map(cm => Superstep.Checkpoint(
+      cm, cfg.algoName, cfg.checkpointEvery, g.edges, Seq("wcc")))
+    val out = Superstep.run(init, p, cfg.maxIter, ckpt) { state =>
       // Only improved vertices broadcast their (smaller) label.
       val msgs = edges
-        .join(state.df.filter(col(CHANGED)).select(col(ID), col(COMP))
+        .join(state.filter(col(CHANGED)).select(col(ID), col(COMP))
             .hint("shuffle_hash"),
           edges(SRC) === col(ID))
         .select(col(DST), col(COMP).as("m"))
         .groupBy(DST)
         .agg(min("m").as("m"))
 
-      val next = Lineage.materialize(
-        state.df.join(msgs.hint("shuffle_hash"),
-            state.df(ID) === msgs(DST), "left")
-          .select(
-            state.df(ID),
-            least(state.df(COMP), coalesce(col("m"), state.df(COMP))).as(COMP),
-            (coalesce(col("m"), lit(Long.MaxValue)) < state.df(COMP)).as(CHANGED)),
-        eager = false)
-
-      active = next.df.filter(col(CHANGED)).count()
-      converged = active == 0L
-
-      cfg.checkpoint.foreach { cm =>
-        if (converged || iter % cfg.checkpointEvery == 0) {
-          cm.commit(cfg.algoName, iter, next.df,
-            Map("active" -> active.toDouble), fp)
-        }
-      }
-      state.release()
-      state = next
+      state.join(msgs.hint("shuffle_hash"), state(ID) === msgs(DST), "left")
+        .select(
+          state(ID),
+          least(state(COMP), coalesce(col("m"), state(COMP))).as(COMP),
+          (coalesce(col("m"), lit(Long.MaxValue)) < state(COMP)).as(CHANGED))
+    } { next =>
+      val active = next.filter(col(CHANGED)).count()
+      (active == 0L, Map("active" -> active.toDouble))
     }
 
     if (!callerCached) g.unpersist()
-    Result(state.df.select(col(ID), col(COMP)), iter, converged)
+    Result(out.state.df.select(col(ID), col(COMP)), out.iterations, out.converged)
   }
 
   /** Number of distinct components (reference:

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.{Lineage, LinkGraph}
+import graft.core.{Lineage, LinkGraph, Superstep}
 import graft.core.LinkGraph.{DST, ID, SRC, WEIGHT}
 
 /**
@@ -43,41 +43,31 @@ object Eigenvector {
     // a second only when tol > 0 — tol=0 is the fixed-iteration /
     // oracle-parity path). `old` stores the previous NORMALIZED value.
     var norm = 1.0
-    var state = Lineage.materialize(
-      verts.df.select(col(ID), lit(1.0 / v).as("raw"), lit(0.0).as("old")),
-      eager = false)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < cfg.maxIter) {
-      iter += 1
+    val init = verts.df.select(col(ID), lit(1.0 / v).as("raw"), lit(0.0).as("old"))
+    val last = Superstep.run(init, p, cfg.maxIter, None) { state =>
       val msgs = g.edges
-        .join(state.df.select(col(ID), (col("raw") / norm).as("c"))
+        .join(state.select(col(ID), (col("raw") / norm).as("c"))
             .hint("shuffle_hash"),
           g.edges(SRC) === col(ID))
         .select(col(DST), (col("c") * col(WEIGHT)).as("m"))
         .groupBy(DST).agg(sum("m").as("m"))
-      val next = Lineage.materialize(
-        state.df.join(msgs.hint("shuffle_hash"),
-            state.df(ID) === msgs(DST), "left")
-          .select(state.df(ID),
-            coalesce(col("m"), lit(0.0)).as("raw"),
-            (state.df("raw") / norm).as("old")),
-        eager = false)
+      state.join(msgs.hint("shuffle_hash"), state(ID) === msgs(DST), "left")
+        .select(state(ID),
+          coalesce(col("m"), lit(0.0)).as("raw"),
+          (state("raw") / norm).as("old"))
+    } { next =>
       val l2 = math.sqrt(
-        next.df.agg(sum(col("raw") * col("raw"))).head().getDouble(0))
-      if (cfg.tol > 0.0) {
-        val l1 = next.df.agg(sum(abs(col("raw") / l2 - col("old"))))
-          .head().getDouble(0)
-        converged = l1 < v * cfg.tol
-      }
+        next.agg(sum(col("raw") * col("raw"))).head().getDouble(0))
+      val converged = cfg.tol > 0.0 &&
+        next.agg(sum(abs(col("raw") / l2 - col("old")))).head().getDouble(0) <
+          v * cfg.tol
       norm = l2
-      state.release()
-      state = next
+      (converged, Map.empty)
     }
 
     verts.release()
     if (!callerCached) g.unpersist()
-    Result(state.df.select(col(ID), (col("raw") / norm).as("eigenvector")),
-      iter, converged)
+    Result(last.state.df.select(col(ID), (col("raw") / norm).as("eigenvector")),
+      last.iterations, last.converged)
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.checkpoint.CheckpointManager
-import graft.core.{Lineage, LinkGraph}
+import graft.core.{Lineage, LinkGraph, Superstep}
 import graft.core.LinkGraph.{DST, ID, SRC, WEIGHT}
 
 /**
@@ -53,14 +53,6 @@ object Sssp {
     // §2.4; measured 85 stages / 34 MB total shuffle at sf0.1).
     // The chg column is checkpointed too, so a resumed run re-enters
     // with the exact change-frontier of the committed superstep.
-    // Fingerprint = weighted edge set + source (see Bfs): refuses to
-    // resume a checkpoint of a different graph/source.
-    val fp = cfg.checkpoint.map(_.graphFingerprint(
-      g.edges, "sssp", source.toString)).getOrElse("")
-    val resume = cfg.checkpoint.flatMap(cm =>
-      cm.latestIteration(cfg.algoName, fp).map(it =>
-        (it, cm.restore(cfg.algoName, it).repartition(p, col(ID)))))
-
     val init = g.vertices.select(col(ID))
       .union(Seq(source).toDF(ID)) // a source outside the edge set
       .distinct()
@@ -69,18 +61,16 @@ object Sssp {
         when(col(ID) === source, lit(0.0)).as("distance"),
         when(col(ID) === source, lit(source)).as("predecessor"),
         (col(ID) === source).as("chg"))
-    var state = Lineage.materialize(
-      resume.map(_._2).getOrElse(init), eager = false)
-    var frontier = 1L
-    var iter = resume.map(_._1).getOrElse(0)
-
-    while (frontier > 0 && iter < cfg.maxIter) {
-      iter += 1
+    // Resume only a checkpoint of the same weighted edge set and source
+    // (see Bfs), in this dense state format.
+    val ckpt = cfg.checkpoint.map(cm => Superstep.Checkpoint(
+      cm, cfg.algoName, cfg.checkpointEvery, g.edges, Seq("sssp", source.toString)))
+    val last = Superstep.run(init, p, cfg.maxIter, ckpt) { st =>
       // Relax out-edges of improved vertices; keep the best (distance,
       // predecessor) candidate per destination — min over struct gives
       // the deterministic (smallest-distance, then smallest-pred) pick.
       val cand = g.edges
-        .join(state.df.filter(col("chg"))
+        .join(st.filter(col("chg"))
             .select(col(ID), col("distance")).hint("shuffle_hash"),
           g.edges(SRC) === col(ID))
         .select(col(DST),
@@ -90,41 +80,25 @@ object Sssp {
         .agg(min("c").as("c"))
         .select(col(DST).as("cid"), col("c.d").as("nd"), col("c.pred").as("np"))
 
-      val st = state.df
       val better = col("nd") <
         coalesce(st("distance"), lit(Double.MaxValue))
-      val nextPlan = st
-        .join(cand.hint("shuffle_hash"), st(ID) === col("cid"), "left")
+      st.join(cand.hint("shuffle_hash"), st(ID) === col("cid"), "left")
         .select(st(ID),
           when(better, col("nd")).otherwise(st("distance")).as("distance"),
           when(better, col("np")).otherwise(st("predecessor"))
             .as("predecessor"),
           coalesce(better, lit(false)).as("chg"))
-      // Loop-shape evidence hook (same convention as PageRank's):
-      // the superstep plan, once, for plans/r06.
-      if (iter == 1 && sys.env.contains("SPARK_GRAFT_EXPLAIN")) {
-        nextPlan.explain("formatted")
-      }
-      val next = Lineage.materialize(nextPlan, eager = false)
-
-      frontier = next.df.filter(col("chg")).count()
-      cfg.checkpoint.foreach { cm =>
-        if (frontier == 0 || iter % cfg.checkpointEvery == 0) {
-          cm.commit(cfg.algoName, iter, next.df,
-            Map("frontier" -> frontier.toDouble,
-              "iteration" -> iter.toDouble), fp)
-        }
-      }
-      state.release()
-      state = next
+    } { next =>
+      val frontier = next.filter(col("chg")).count()
+      (frontier == 0L, Map("frontier" -> frontier.toDouble))
     }
 
     // Reached vertices only (the dense state's unreached rows carry
     // null distance) — same output contract as before.
     val out = Lineage.materialize(
-      state.df.filter(col("distance").isNotNull)
+      last.state.df.filter(col("distance").isNotNull)
         .select(col(ID), col("distance"), col("predecessor")))
-    state.release()
+    last.state.release()
     if (!callerCached) g.unpersist()
     out.df
   }

@@ -53,12 +53,13 @@ object TriangleCount {
     val simple = g.withoutSelfLoops.dedupe
 
     // 2-core peel (reference: core_number OUT, k=2 — `:240-241`).
-    // twoCore returns already-materialized (cached) edges.
-    val coreEdges = twoCore(simple).edges
+    // The peel returns already-materialized (cached) edges.
+    val (core, _, coreRows) = peel(simple)
+    val coreEdges = core.edges
 
     // One oriented-adjacency entry per undirected edge: the cached
     // symmetric row count / 2 sizes the broadcast decision.
-    val bcast = lastTwoCoreEdges * 8L < DefaultBroadcastAdjBytes
+    val bcast = coreRows * 8L < DefaultBroadcastAdjBytes
 
     // Orient low→high by (degree, id); each undirected edge kept once.
     // Materialized ONCE (hash-partitioned by src so the adjacency
@@ -129,15 +130,12 @@ object TriangleCount {
    * restricted to k=2 which is all triangle counting needs). Returns
    * the induced subgraph on the 2-core.
    */
-  /** Peel rounds taken by the most recent [[twoCore]] (oracle sizing). */
-  @volatile var lastTwoCoreRounds: Int = 0
+  def twoCore(g: LinkGraph, maxIter: Int = 100): LinkGraph = peel(g, maxIter)._1
 
-  /** Symmetric edge rows surviving the most recent [[twoCore]] — free
-   * (the peel loop counts every round) and sizes [[run]]'s
-   * broadcast-vs-shuffle adjacency decision. */
-  @volatile var lastTwoCoreEdges: Long = 0L
-
-  def twoCore(g: LinkGraph, maxIter: Int = 100): LinkGraph = {
+  /** The 2-core peel: (2-core subgraph, peel rounds, surviving symmetric
+   * edge rows). The row count is free (the loop counts every round) and
+   * sizes [[run]]'s broadcast-vs-shuffle adjacency decision. */
+  private[graft] def peel(g: LinkGraph, maxIter: Int = 100): (LinkGraph, Int, Long) = {
     var cur = graft.core.Lineage.materialize(g.edges, eager = false)
     var n = cur.df.count()
     var changed = true
@@ -164,8 +162,6 @@ object TriangleCount {
       cur.release()
       cur = next
     }
-    lastTwoCoreRounds = it
-    lastTwoCoreEdges = n
-    LinkGraph(cur.df, g.directed, g.numPartitions)
+    (LinkGraph(cur.df, g.directed, g.numPartitions), it, n)
   }
 }

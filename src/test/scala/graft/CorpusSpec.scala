@@ -301,6 +301,51 @@ class ResumeSpec extends SparkSpec {
     assert(got == want)
   }
 
+  test("sssp refuses a checkpoint in the pre-dense state format") {
+    import graft.algos.Sssp
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-sssp-v1").toString
+    val edges = loadFixture("dolphins")
+    val g = graphOf(edges).symmetrize
+    val root = edges.map(_._1).min
+    val want = Sssp.run(g, root).collect()
+      .map(r => r.getLong(0) -> (r.getDouble(1), r.getLong(2))).toMap
+
+    // The state an older SSSP committed: reached vertices only, no
+    // change-frontier column, under the fingerprint it used then.
+    val cm = new graft.checkpoint.CheckpointManager(dir, spark)
+    val stale = Sssp.run(g, root, Sssp.Config(maxIter = 3))
+    assert(stale.count() < want.size)
+    cm.commit("sssp", 3, stale, Map("frontier" -> 1.0),
+      cm.graphFingerprint(g.edges, "sssp", root.toString))
+
+    val got = Sssp.run(g, root, Sssp.Config(checkpointEvery = 1000,
+        checkpoint = Some(cm)))
+      .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getLong(2))).toMap
+    assert(got == want)
+  }
+
+  test("lpa resumes from checkpoint and matches an uninterrupted run") {
+    import graft.algos.LabelPropagation
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-lpa").toString
+    val g = graphOf(loadFixture("karate")).symmetrize
+    val full = LabelPropagation.run(g)
+    val want = full.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+    // Phase 1: killed after 2 supersteps (commit every superstep).
+    val cm1 = new graft.checkpoint.CheckpointManager(dir, spark)
+    LabelPropagation.run(g, LabelPropagation.Config(maxIter = 2,
+      checkpointEvery = 1, checkpoint = Some(cm1)))
+    assert(cm1.latestIteration("lpa").contains(2))
+
+    // Phase 2: resume; same labels, superstep count and convergence.
+    val cm2 = new graft.checkpoint.CheckpointManager(dir, spark)
+    val resumed = LabelPropagation.run(g,
+      LabelPropagation.Config(checkpointEvery = 1, checkpoint = Some(cm2)))
+    assert(resumed.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == want)
+    assert(resumed.iterations == full.iterations)
+    assert(resumed.converged == full.converged)
+  }
+
   test("stale checkpoints of a different graph/source are NOT resumed") {
     import graft.algos.Bfs
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-fp").toString
